@@ -42,13 +42,18 @@ from stirling_pdf_spark.sources.tables import read_table
 
 def _ship_package(spark: SparkSession) -> None:
     """Make the package importable inside the driver's Python workers
-    (the spark-submit --py-files shape) — idempotent."""
+    (the spark-submit --py-files shape), once per SparkContext: every
+    addPyFile appends to the includes sent with each task and
+    invalidates the driver's import caches."""
     try:
         from stirling_pdf_spark.session import package_zip
 
-        spark.sparkContext.addPyFile(package_zip())
+        path = package_zip()
+        sc = spark.sparkContext
+        if os.path.basename(path) not in sc._python_includes:
+            sc.addPyFile(path)
     except Exception:
-        pass  # already added, or driver-side sys.path suffices
+        pass  # driver-side sys.path suffices
 
 
 def _fan_out(df: DataFrame, *cols: str) -> DataFrame:

@@ -30,8 +30,7 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     n_queries = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    spark = get_spark("ivf-recall",
-                      cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("ivf-recall")
     emb = read_table(spark, sf_dir, "embeddings").cache()
     n = emb.count()
     # deterministic query sample: every (n // n_queries)-th id

@@ -34,8 +34,7 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     n_queries = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    spark = get_spark("pq-recall",
-                      cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("pq-recall")
     emb = read_table(spark, sf_dir, "embeddings").cache()
 
     rows = emb.select("vec_id", "embedding").orderBy("vec_id").collect()

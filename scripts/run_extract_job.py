@@ -30,8 +30,8 @@ def main() -> None:
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--synth-docs", type=int, default=0,
                     help="if >0, synthesize this many docs instead of reading")
-    ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=None,
+                    help="default: $SPARK_GRAFT_CPUS, else the host's cores")
     args = ap.parse_args()
 
     from stirling_pdf_spark.corpus.spark_synth import (

@@ -37,8 +37,8 @@ def main() -> None:
     ap.add_argument("--no-quality", action="store_true",
                     help="skip the Gopher stage (synthetic corpora have "
                          "no stopwords and would be emptied by it)")
-    ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=None,
+                    help="default: $SPARK_GRAFT_CPUS, else the host's cores")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F

@@ -17,4 +17,9 @@ Layout:
   runtime/    metrics, lineage, resume
 """
 
+from ._worker_imports import install as _install_worker_imports
+
 __version__ = "0.1.0"
+
+# Spark Python workers import this package before running its code
+_install_worker_imports()

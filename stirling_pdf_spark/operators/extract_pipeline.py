@@ -2,16 +2,20 @@
 
 Shape (SURVEY.md §3.1 "Spark equivalent"):
 
-    read docs -> repartition(hash(doc_id))
+    read docs -> repartition(num_partitions, hash(doc_id))
               -> mapInArrow(route):                       ONE source scan
                    small doc -> extracted spans (final)
                    mega doc  -> raw page-range bucket rows (salt)
               -> persist (spill-safe staging of the routed stage)
               -> [final] project                           (no more work)
-                 [mega]   repartition(doc_id, bucket)
+                 [mega]   repartition(doc_id, bucket)      (AQE-sized)
                           -> mapInArrow(kernel, unbudgeted)
                           -> groupBy(doc_id) applyInPandas(reassemble+budget)
     -> unionByName -> write spans_out + metrics + lineage
+
+The salted branch's shuffles carry no partition count, so AQE sizes
+them from the data: a corpus without mega-docs runs each of its Python
+stages as one task instead of ``num_partitions`` empty ones.
 
 Why salting: one 1500-page PDF in a hash-partitioned batch of 1-page
 docs is exactly the skew the reference never faces (one doc == one HTTP
@@ -251,6 +255,10 @@ def extract_spans(
     """docs(doc_id, spans: array<raw span struct>) ->
     spans_out(doc_id, spans: array<(kind,text,media_ref,order)>).
 
+    ``num_partitions`` sizes the per-document pass (the doc_id
+    repartition before the route or small-doc extraction); the salted
+    branch's shuffles are left to AQE.
+
     ``stage``: None = auto (persist the routed stage iff the input plan
     contains a Python stage); True/False force. Both paths are
     bit-identical (pinned in tests)."""
@@ -281,13 +289,13 @@ def extract_spans(
         )
         sub_src = (
             docs.filter(n_spans > salt_threshold)
-            .repartition(num_partitions, "doc_id")
+            .repartition("doc_id")
             .mapInArrow(_route_factory(0, pages_per_bucket), _ROUTED_SCHEMA)
             .select("doc_id", "bucket", "spans")
         )
 
     sub = (
-        sub_src.repartition(num_partitions, "doc_id", "bucket")
+        sub_src.repartition("doc_id", "bucket")
         .mapInArrow(_extract_sub, _SUB_SCHEMA)
     )
     big_out = sub.groupBy("doc_id").applyInPandas(_reassemble, SPANS_OUT_SCHEMA)
@@ -319,14 +327,4 @@ def extract_metadata(spans_out: DataFrame) -> DataFrame:
         "doc_id",
         F.split_part("text", F.lit("|"), F.lit(1)).alias("key"),
         F.substring_index("text", "|", -1).alias("value"),
-    )
-
-
-def span_counts_by_kind(spans_out: DataFrame) -> DataFrame:
-    """Flagship aggregate (SURVEY.md §7 Phase 1): spans per kind per doc."""
-    return (
-        explode_spans(spans_out)
-        .groupBy("doc_id", "kind")
-        .agg(F.count("*").alias("n_spans"))
-        .orderBy("doc_id", "kind")
     )

@@ -130,3 +130,44 @@ def test_stage_paths_bit_identical(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert _has_python_stage(pq) is False      # plain scan: no persist
     assert _has_python_stage(docs) is True     # derivation: staged once
+
+
+def test_empty_salted_branch_runs_one_task_per_stage(spark, tmp_path):
+    """On a plain-scan corpus with no mega-doc, AQE sizes the salted
+    branch's shuffles: its route and per-bucket Python stages run at
+    most one task each, whatever ``num_partitions`` is."""
+    from stirling_pdf_spark.corpus.spark_synth import synth_docs_df
+
+    path = str(tmp_path / "docs.parquet")
+    synth_docs_df(spark, 40, seed=7, mega_pages=(5, 8),
+                  num_partitions=2).write.parquet(path)
+    sc = spark.sparkContext
+    group = "empty-salted-branch"
+    sc.setJobGroup(group, group)
+    try:
+        out = extract_spans(spark.read.parquet(path), num_partitions=8,
+                            stage=False)
+        assert out.count() == 40
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    store = sc._jsc.sc().statusStore()
+    cc = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    tracker = sc.statusTracker()
+    stage_ids = sorted({s for j in tracker.getJobIdsForGroup(group)
+                        for s in tracker.getJobInfo(j).stageIds})
+
+    def operators(cluster):
+        yield cluster.name()
+        for child in cc.asJava(cluster.childClusters()):
+            yield from operators(child)
+
+    salted = []   # Python stages that feed a shuffle, not the result stage
+    for sid in stage_ids:
+        attempt = store.lastStageAttempt(sid)
+        ops = set(operators(store.operationGraphForStage(sid).rootCluster()))
+        if attempt.status().toString() == "COMPLETE" and "MapInArrow" in ops \
+                and "Union" not in ops:
+            salted.append(attempt.numCompleteTasks())
+    assert len(salted) == 2, salted
+    assert max(salted) <= 1, salted
