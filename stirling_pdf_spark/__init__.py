@@ -15,6 +15,7 @@ Layout:
   sources/    table readers (parquet; Iceberg behind an import-try)
   functions/  shared column expressions
   runtime/    metrics, lineage, resume
+  spans.py    the span table's Arrow codec and per-document stage
 """
 
 from ._worker_imports import install as _install_worker_imports

@@ -3,7 +3,7 @@
 Two sources for the interleaved-docs table (both deterministic, no
 external data):
   * ``synth_docs_df`` — archetype corpus from doc indices
-    (spark.range -> mapInPandas(generator)); generation is distributed,
+    (spark.range -> mapInArrow(generator)); generation is distributed,
     so bench corpora never bottleneck on the driver;
   * ``docs_from_documents_table`` — derived 1:1 from the driver's
     read-only ``documents`` parquet via corpus.synth.synth_from_text.
@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..kernel import wire
 from ..kernel.model import TextRun
 from ..sources.tables import DOCS_SCHEMA, read_table
+from ..spans import DOCS_ARROW, to_batch
 from .synth import synth_doc, synth_from_text
 
 _RAW_FIELDS = ("kind", "text", "media_ref", "offset")
@@ -23,37 +24,6 @@ _RAW_FIELDS = ("kind", "text", "media_ref", "offset")
 
 def _raw_dicts(spans) -> list[dict]:
     return [dict(zip(_RAW_FIELDS, s)) for s in spans]
-
-
-def _spans_batch(ids: list[str], span_lists: list[list[tuple]]):
-    """Columnar Arrow encode of (doc_id, spans) rows — four flat
-    arrays + one offsets array instead of a Python dict per span (the
-    dict-per-span pandas path was the dominant cost of corpus
-    materialization, not the synthesis itself)."""
-    import pyarrow as pa
-
-    kinds: list[str] = []
-    texts: list[str] = []
-    refs: list[str] = []
-    offs: list[int] = []
-    offsets = [0]
-    for spans in span_lists:
-        for k, t, m, o in spans:
-            kinds.append(k)
-            texts.append(t)
-            refs.append(m)
-            offs.append(o)
-        offsets.append(len(kinds))
-    struct = pa.StructArray.from_arrays(
-        [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-         pa.array(refs, pa.string()), pa.array(offs, pa.int32())],
-        names=list(_RAW_FIELDS),
-    )
-    return pa.RecordBatch.from_arrays(
-        [pa.array(ids, pa.string()),
-         pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)],
-        names=["doc_id", "spans"],
-    )
 
 
 def synth_docs_df(
@@ -70,7 +40,7 @@ def synth_docs_df(
         for rb in batches:
             rows = [synth_doc(int(i), seed, mega_pages)
                     for i in rb.column(0).to_pylist()]
-            yield _spans_batch([r[0] for r in rows], [r[2] for r in rows])
+            yield to_batch([(r[0], r[2]) for r in rows], DOCS_ARROW)
 
     return (
         spark.range(0, n_docs, numPartitions=num_partitions)
@@ -114,7 +84,7 @@ def _derive_docs(spark: SparkSession, sf_dir: str, derive) -> DataFrame:
 
     The ``documents`` table is a single small parquet file at bench
     scale (one row group — unsplittable), so the scan is ONE task and
-    a mapInPandas directly over it runs the whole synthesis serially.
+    a mapInArrow directly over it runs the whole synthesis serially.
     Fan out to the session's parallelism first (hash on doc_id —
     deterministic under retry, unlike round-robin) unless the scan is
     already at least that parallel (a 100 TB table has thousands of
@@ -129,15 +99,10 @@ def _derive_docs(spark: SparkSession, sf_dir: str, derive) -> DataFrame:
 
     def gen(batches):
         for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            texts = rb.column(names.index("text")).to_pylist()
-            out_ids, out_spans = [], []
-            for doc_id, text in zip(ids, texts):
-                did, spans = derive(f"doc-{doc_id}", text or "")
-                out_ids.append(did)
-                out_spans.append(spans)
-            yield _spans_batch(out_ids, out_spans)
+            ids = rb.column("doc_id").to_pylist()
+            texts = rb.column("text").to_pylist()
+            yield to_batch([derive(f"doc-{doc_id}", text or "")
+                            for doc_id, text in zip(ids, texts)], DOCS_ARROW)
 
     return docs.mapInArrow(gen, DOCS_SCHEMA)
 

@@ -36,6 +36,7 @@ exactly — determinism of the span-equality contract depends on it.
 from __future__ import annotations
 
 from .model import MediaDraw, TextRun
+from .tables import parse_rule
 
 _SEP = "\t"
 
@@ -70,3 +71,20 @@ def parse_pagemeta(text: str) -> tuple[int, float, float, int, str]:
 def parse_media(text: str, media_ref: str) -> MediaDraw:
     page_s, x_s, y_s, w_s, h_s = text.split("|", 4)
     return MediaDraw(int(page_s), float(x_s), float(y_s), float(w_s), float(h_s), media_ref)
+
+
+_PARSERS = {"text": lambda text, _ref: parse_text_run(text),
+            "media": parse_media,
+            "rule": lambda text, _ref: parse_rule(text)}
+
+
+def by_page(raw_spans, kinds: tuple[str, ...] = ("text",)) -> dict[str, dict]:
+    """One document's raw spans of ``kinds`` parsed in offset order and
+    grouped by page: {kind: {page: [TextRun | MediaDraw | Rule]}} for
+    'text', 'media' and 'rule'."""
+    out: dict[str, dict] = {k: {} for k in kinds}
+    for kind, text, media_ref, _off in sorted(raw_spans, key=lambda s: s[3]):
+        if kind in out:
+            item = _PARSERS[kind](text, media_ref)
+            out[kind].setdefault(item.page, []).append(item)
+    return out

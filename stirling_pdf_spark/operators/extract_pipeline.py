@@ -26,9 +26,11 @@ page-range sub-documents (salt = page bucket), extracted independently
 pages), and reassembled with the global 2000-text-chunk budget
 re-applied — bit-identical to the unsalted kernel output.
 
-All per-document work happens inside mapInArrow stages with columnar
-span decode/encode (no per-row Spark Python UDFs); the only shuffles
-are the repartition by doc_id and the (mega-doc-only) bucket shuffle +
+The route and both extraction stages are mapInArrow stages over the
+span codec (``stirling_pdf_spark/spans.py``: columnar decode, encode
+under the declared schema; no per-row Spark Python UDFs); only the
+mega-doc reassembly is a grouped applyInPandas. The only shuffles are
+the repartition by doc_id and the (mega-doc-only) bucket shuffle +
 regroup, both on keys that are unique or salted — no hot keys by
 construction.
 
@@ -40,12 +42,12 @@ expensive derivation (corpus synthesis, a join). But when the input is
 a plain Parquet/Iceberg scan, two pruned scans are CHEAPER than writing
 the whole routed output through the memory store (measured: the
 unconditional persist cost ~40% wall at local[8] on a
-memory-bandwidth-bound box). So ``stage=None`` auto-detects: inputs
-whose plan contains a Python stage (mapInPandas/mapInArrow/UDF) are
-staged once (persist MEMORY_AND_DISK — spills instead of OOMing, and
-the ContextCleaner drops the cache when the DataFrame is collected);
-plain scans take the two-branch filter shape where each branch reads
-the source directly.
+memory-bandwidth-bound box). So the input plan decides: inputs whose
+plan contains a Python stage (mapInPandas/mapInArrow/UDF) are staged
+once (persist MEMORY_AND_DISK — spills instead of OOMing, and the
+ContextCleaner drops the cache when the DataFrame is collected); plain
+scans take the two-branch filter shape where each branch reads the
+source directly.
 """
 
 from __future__ import annotations
@@ -55,9 +57,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.extract import extract_doc
 from ..kernel.model import MAX_CHUNKS_PER_DOC
+from ..spans import decode, doc_partitions, encode, to_batch
 
 OUT_SPAN_STRUCT = T.StructType([
     T.StructField("kind", T.StringType(), False),
@@ -65,21 +69,22 @@ OUT_SPAN_STRUCT = T.StructType([
     T.StructField("media_ref", T.StringType(), True),
     T.StructField("order", T.IntegerType(), False),
 ])
+_OUT_SPANS = T.ArrayType(OUT_SPAN_STRUCT)
 SPANS_OUT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
-    T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT), False),
+    T.StructField("spans", _OUT_SPANS, False),
 ])
 _SUB_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("bucket", T.LongType(), False),
-    T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT), False),
+    T.StructField("spans", _OUT_SPANS, False),
 ])
 # routed stage: final docs carry extracted spans; mega-doc bucket rows
 # carry RAW spans (the struct's 4th field then holds the raw offset)
 _ROUTED_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("bucket", T.LongType(), False),
-    T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT), False),
+    T.StructField("spans", _OUT_SPANS, False),
     T.StructField("final", T.BooleanType(), False),
 ])
 
@@ -92,35 +97,12 @@ _BOOKMARK_BUCKET = 1 << 30     # bookmark tree after html (kernel contract)
 _ATTACH_BUCKET = (1 << 30) + 1  # attachments read last (kernel contract)
 
 
-def _decode_span_lists(col: "pa.Array", off_field: str = "offset") -> list[list[tuple]]:
-    """Columnar decode of array<struct<kind,text,media_ref,{off_field}>>:
-    four flat to_pylist() calls (C speed) + one zip, instead of a dict
-    per span — the dominant cost of the UDF boundary at scale."""
-    lst = col.combine_chunks() if hasattr(col, "combine_chunks") else col
-    vals = lst.flatten()
-    flat = list(zip(
-        vals.field("kind").to_pylist(),
-        vals.field("text").to_pylist(),
-        vals.field("media_ref").to_pylist(),
-        vals.field(off_field).to_pylist(),
-    ))
-    offs = lst.offsets.to_pylist()
-    return [flat[offs[i]:offs[i + 1]] for i in range(len(offs) - 1)]
+# the codec under the names perfbench's serial replay reads
+_decode_span_lists = decode
 
 
 def _encode_span_lists(span_lists: list[list[tuple]]) -> "pa.ListArray":
-    """Columnar encode of the kernel output back to Arrow."""
-    kinds, texts, refs, orders, offs = [], [], [], [], [0]
-    for spans in span_lists:
-        for k, t, m, o in spans:
-            kinds.append(k); texts.append(t); refs.append(m); orders.append(o)
-        offs.append(len(kinds))
-    struct = pa.StructArray.from_arrays(
-        [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-         pa.array(refs, pa.string()), pa.array(orders, pa.int32())],
-        names=["kind", "text", "media_ref", "order"],
-    )
-    return pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
+    return encode(span_lists, _OUT_SPANS)
 
 
 def _bucket_of(kind: str, text: str, pages_per_bucket: int) -> int:
@@ -141,50 +123,33 @@ def _bucket_of(kind: str, text: str, pages_per_bucket: int) -> int:
 
 
 def _route_factory(salt_threshold: int, pages_per_bucket: int):
+    routed = to_arrow_schema(_ROUTED_SCHEMA)
+
     def route(batches):
         for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out_ids: list[str] = []
-            out_buckets: list[int] = []
-            out_spans: list[list[tuple]] = []
-            out_final: list[bool] = []
-            for did, spans in zip(ids, raw):
+            rows: list[tuple] = []
+            for did, spans in zip(rb.column("doc_id").to_pylist(),
+                                  decode(rb.column("spans"))):
                 if len(spans) <= salt_threshold:
-                    out_ids.append(did)
-                    out_buckets.append(0)
-                    out_spans.append(extract_doc(spans))
-                    out_final.append(True)
-                else:
-                    by_bucket: dict[int, list[tuple]] = {}
-                    for s in spans:
-                        by_bucket.setdefault(
-                            _bucket_of(s[0], s[1], pages_per_bucket), []
-                        ).append(s)
-                    for b, sub in by_bucket.items():
-                        out_ids.append(did)
-                        out_buckets.append(b)
-                        out_spans.append(sub)
-                        out_final.append(False)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, pa.string()),
-                 pa.array(out_buckets, pa.int64()),
-                 _encode_span_lists(out_spans),
-                 pa.array(out_final, pa.bool_())],
-                names=["doc_id", "bucket", "spans", "final"],
-            )
+                    rows.append((did, 0, extract_doc(spans), True))
+                    continue
+                by_bucket: dict[int, list[tuple]] = {}
+                for s in spans:
+                    by_bucket.setdefault(
+                        _bucket_of(s[0], s[1], pages_per_bucket), []
+                    ).append(s)
+                rows.extend((did, b, sub, False)
+                            for b, sub in by_bucket.items())
+            yield to_batch(rows, routed)
 
     return route
 
 
 def _extract_small(batches):
     for rb in batches:
-        names = rb.schema.names
-        raw = _decode_span_lists(rb.column(names.index("spans")))
-        out = [extract_doc(spans) for spans in raw]
+        out = [extract_doc(spans) for spans in decode(rb.column("spans"))]
         yield pa.RecordBatch.from_arrays(
-            [rb.column(names.index("doc_id")), _encode_span_lists(out)],
+            [rb.column("doc_id"), _encode_span_lists(out)],
             names=["doc_id", "spans"],
         )
 
@@ -194,12 +159,10 @@ def _extract_sub(batches):
     # reassembly (see module docstring). The raw offsets of the bucket
     # rows travel in the struct's 'order' field.
     for rb in batches:
-        names = rb.schema.names
-        raw = _decode_span_lists(rb.column(names.index("spans")), "order")
-        out = [extract_doc(spans, chunk_budget=None) for spans in raw]
+        out = [extract_doc(spans, chunk_budget=None)
+               for spans in decode(rb.column("spans"), "order")]
         yield pa.RecordBatch.from_arrays(
-            [rb.column(names.index("doc_id")),
-             rb.column(names.index("bucket")),
+            [rb.column("doc_id"), rb.column("bucket"),
              _encode_span_lists(out)],
             names=["doc_id", "bucket", "spans"],
         )
@@ -250,24 +213,20 @@ def extract_spans(
     num_partitions: int | None = None,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     pages_per_bucket: int = PAGES_PER_BUCKET,
-    stage: bool | None = None,
 ) -> DataFrame:
     """docs(doc_id, spans: array<raw span struct>) ->
     spans_out(doc_id, spans: array<(kind,text,media_ref,order)>).
 
     ``num_partitions`` sizes the per-document pass (the doc_id
-    repartition before the route or small-doc extraction); the salted
-    branch's shuffles are left to AQE.
-
-    ``stage``: None = auto (persist the routed stage iff the input plan
-    contains a Python stage); True/False force. Both paths are
-    bit-identical (pinned in tests)."""
+    repartition before the route or small-doc extraction; default
+    ``spans.doc_partitions``); the salted branch's shuffles are left
+    to AQE. The routed stage is persisted iff the input plan contains
+    a Python stage (module docstring); both paths are bit-identical
+    (pinned in tests)."""
     if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-    if stage is None:
-        stage = _has_python_stage(docs)
+        num_partitions = doc_partitions(docs)
 
-    if stage:
+    if _has_python_stage(docs):
         from ..runtime.staging import stage as stage_df
 
         routed = stage_df(

@@ -102,24 +102,20 @@ def match_offsets(elements: DataFrame, term: str, regex: bool = False,
 
 
 def text_search_pages(docs: DataFrame, term: str, regex: bool = False,
-                      whole_word: bool = False,
-                      num_partitions: int | None = None) -> DataFrame:
+                      whole_word: bool = False) -> DataFrame:
     """Full TextFinder semantics over the RAW docs table
     (TextFinder.java:21-193): page text accumulated with separator
     nulls, per-match glyph-union bboxes, and the ±5 nearby-position
     fallback for matches that land entirely on inserted separators
-    (:139-158). One Arrow stage, no shuffle inside.
+    (:139-158). One per-document stage, no shuffle inside.
 
     Output: (doc_id, page, match_no, x1, y1, x2, y2, match)."""
-    import pyarrow as pa
     from pyspark.sql import types as T
 
     from ..kernel import wire
     from ..kernel.textfind import find_matches
-    from .extract_pipeline import _decode_span_lists
+    from ..spans import map_docs
 
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
     schema = T.StructType([
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("page", T.LongType(), False),
@@ -131,45 +127,14 @@ def text_search_pages(docs: DataFrame, term: str, regex: bool = False,
         T.StructField("match", T.StringType(), False),
     ])
 
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            cols = {n: [] for n in
-                    ("doc_id", "page", "match_no", "x1", "y1", "x2", "y2",
-                     "match")}
-            for did, spans in zip(ids, raw):
-                runs_by_page: dict[int, list] = {}
-                for kind, text, _ref, _off in sorted(spans,
-                                                     key=lambda s: s[3]):
-                    if kind == "text":
-                        r = wire.parse_text_run(text)
-                        runs_by_page.setdefault(r.page, []).append(r)
-                for page in sorted(runs_by_page):
-                    for i, m in enumerate(find_matches(
-                            runs_by_page[page], term, regex, whole_word)):
-                        cols["doc_id"].append(did)
-                        cols["page"].append(page)
-                        cols["match_no"].append(i)
-                        cols["x1"].append(m.x1)
-                        cols["y1"].append(m.y1)
-                        cols["x2"].append(m.x2)
-                        cols["y2"].append(m.y2)
-                        cols["match"].append(m.text)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], pa.string()),
-                 pa.array(cols["page"], pa.int64()),
-                 pa.array(cols["match_no"], pa.int64()),
-                 pa.array(cols["x1"], pa.float64()),
-                 pa.array(cols["y1"], pa.float64()),
-                 pa.array(cols["x2"], pa.float64()),
-                 pa.array(cols["y2"], pa.float64()),
-                 pa.array(cols["match"], pa.string())],
-                names=list(cols),
-            )
+    def per_doc(did, spans):
+        runs_by_page = wire.by_page(spans)["text"]
+        for page in sorted(runs_by_page):
+            for i, m in enumerate(find_matches(
+                    runs_by_page[page], term, regex, whole_word)):
+                yield did, page, i, m.x1, m.y1, m.x2, m.y2, m.text
 
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(run, schema)
+    return map_docs(docs, per_doc, schema)
 
 
 def mask_matches(text: Column, pattern: str,

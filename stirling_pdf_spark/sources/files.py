@@ -20,8 +20,8 @@ becomes one document:
     EmlProcessingUtils.java:256-284 path), attachments as attachment
     spans with content-hash media_refs.
 
-Everything stays Arrow-batched (mapInPandas over the binaryFile rows);
-doc_id = the file name.
+Everything stays Arrow-batched (mapInArrow over the binaryFile rows,
+encoded by the span codec); doc_id = the file name.
 """
 
 from __future__ import annotations
@@ -29,40 +29,42 @@ from __future__ import annotations
 import hashlib
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..spans import DOCS_ARROW, to_batch
 from .tables import DOCS_SCHEMA
 
-_RAW_FIELDS = ("kind", "text", "media_ref", "offset")
 
+def _file_docs(spark: SparkSession, path: str, glob: str,
+               file_spans) -> DataFrame:
+    """One doc per file under ``path`` matching ``glob``: doc_id = the
+    file name, spans = ``file_spans(name, content bytes)``."""
+    def gen(batches):
+        for rb in batches:
+            names = [os.path.basename(p)
+                     for p in rb.column("path").to_pylist()]
+            yield to_batch(
+                [(n, file_spans(n, c)) for n, c in
+                 zip(names, rb.column("content").to_pylist())], DOCS_ARROW)
 
-def _dicts(spans) -> list[dict]:
-    return [dict(zip(_RAW_FIELDS, s)) for s in spans]
-
-
-def _binary_files(spark: SparkSession, path: str, glob: str) -> DataFrame:
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
         .select("path", "content")
+        .mapInArrow(gen, DOCS_SCHEMA)
     )
+
+
+def _decode(content: bytes) -> str:
+    return content.decode("utf-8", "replace")
 
 
 def docs_from_html_files(spark: SparkSession, path: str,
                          glob: str = "*.html") -> DataFrame:
     """One doc per .html file: a single raw html span."""
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                ids.append(os.path.basename(p))
-                markup = bytes(content).decode("utf-8", "replace")
-                spans.append(_dicts([("html", markup, "", 0)]))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(spark, path, glob,
+                      lambda _n, c: [("html", _decode(c), "", 0)])
 
 
 def docs_from_markdown_files(spark: SparkSession, path: str,
@@ -74,17 +76,9 @@ def docs_from_markdown_files(spark: SparkSession, path: str,
     converted-document behavior."""
     from ..functions.markdown_ingest import markdown_to_html
 
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                ids.append(os.path.basename(p))
-                md = bytes(content).decode("utf-8", "replace")
-                spans.append(_dicts([("htmlbody", markdown_to_html(md),
-                                      "", 0)]))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(
+        spark, path, glob,
+        lambda _n, c: [("htmlbody", markdown_to_html(_decode(c)), "", 0)])
 
 
 def docs_from_text_files(spark: SparkSession, path: str,
@@ -93,18 +87,8 @@ def docs_from_text_files(spark: SparkSession, path: str,
     geometry (plain text carries none of its own)."""
     from ..corpus.synth import synth_from_text
 
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(p)
-                text = bytes(content).decode("utf-8", "replace")
-                _, raw = synth_from_text(name, text)
-                ids.append(name)
-                spans.append(_dicts(raw))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(spark, path, glob,
+                      lambda n, c: synth_from_text(n, _decode(c))[1])
 
 
 def _eml_to_spans(raw: bytes) -> list[tuple]:
@@ -141,15 +125,7 @@ def docs_from_eml_files(spark: SparkSession, path: str,
                         glob: str = "*.eml") -> DataFrame:
     """One doc per .eml file: meta headers + body html + attachments
     (H6 EML parse as an ingestion source)."""
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                ids.append(os.path.basename(p))
-                spans.append(_dicts(_eml_to_spans(bytes(content))))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(spark, path, glob, lambda _n, c: _eml_to_spans(c))
 
 
 def docs_from_markdown_strings(df: DataFrame, id_col: str = "doc_id",
@@ -160,13 +136,11 @@ def docs_from_markdown_strings(df: DataFrame, id_col: str = "doc_id",
     from ..functions.markdown_ingest import markdown_to_html
 
     def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for did, md in zip(pdf[id_col], pdf[md_col]):
-                ids.append(did)
-                spans.append(_dicts([("htmlbody",
-                                      markdown_to_html(md or ""),
-                                      "", 0)]))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
+        for rb in batches:
+            yield to_batch(
+                [(did, [("htmlbody", markdown_to_html(md or ""), "", 0)])
+                 for did, md in zip(rb.column(id_col).to_pylist(),
+                                    rb.column(md_col).to_pylist())],
+                DOCS_ARROW)
 
-    return df.select(id_col, md_col).mapInPandas(gen, DOCS_SCHEMA)
+    return df.select(id_col, md_col).mapInArrow(gen, DOCS_SCHEMA)
